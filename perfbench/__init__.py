@@ -1,0 +1,1 @@
+"""KG-construction benchmark harness (see README.md in this directory)."""
