@@ -4090,7 +4090,7 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT query_id,
                    count(*) AS steps_count,
-                   sum(n_ev) AS evidence_count,
+                   CAST(sum(n_ev) AS BIGINT) AS evidence_count,
                    string_agg(CASE WHEN rk <= 3 THEN step_id END, '|'
                               ORDER BY rk) AS keys_joined
             FROM ranked

@@ -39,10 +39,12 @@ from pyspark.sql import functions as F
 
 from .. import schemas
 from ..operators.canonicalize import (
+    TRIPLE_KEY_COL,
     canonical_entities,
     resolve_canonical,
     rewrite_mentions,
     rewrite_triples,
+    with_triple_key,
 )
 from ..operators.chunking import chunk_conversations
 from ..operators.community import community_catalog, detect_communities
@@ -62,6 +64,7 @@ from ..operators.parsing import (
 )
 from ..sources.transcripts import conversation_registry
 from . import fsio
+from .merge import BUCKET_COL, table_bucket_spec, write_bucketed
 
 
 @dataclass
@@ -73,14 +76,18 @@ class BuildConfig:
     max_levels: int = 3
     extractor: object = None  # None → deterministic stub
     fail_after_bucket: int | None = None  # test hook: simulate a crash
-    # >0 → per-conversation tables (transcripts/chunks/extractions/
-    # parsed) are stored bucket-partitioned by conv_id so an
-    # incremental cycle can MERGE only the delta-touched partitions
-    # (plans/merge.py) instead of rewriting whole tables. At 100 TB
-    # this is the difference between delta-proportional and
-    # corpus-proportional incremental I/O; Iceberg's bucket transform
-    # is the managed equivalent.
-    bucket_convs: int = 0
+    # bucket count of the warehouse's bucket-partitioned tables
+    # (BUCKET_KEYS): an incremental cycle MERGEs only the delta-touched
+    # partitions (plans/merge.py) instead of rewriting whole tables —
+    # delta-proportional rather than corpus-proportional I/O. Iceberg's
+    # bucket transform is the managed equivalent.
+    bucket_convs: int = 8
+
+    def __post_init__(self):
+        if self.bucket_convs <= 0:
+            raise ValueError(
+                f"bucket_convs must be positive, got {self.bucket_convs}"
+            )
 
 
 def _run_parallel(tasks):
@@ -136,7 +143,34 @@ FORMAT_FILE = "_format_version.json"
 # 2: mentions_raw is conv-complete — one row per CONTRIBUTING conv for
 #    a shared content-hash chunk (operators/parsing.mentions_raw), the
 #    invariant the delta incremental path's conv-keyed MERGE relies on
-FORMAT_VERSION = 2
+# 3: bucketed layout + inverted indexes — every BUCKET_KEYS table is
+#    bucket-partitioned by its key (triples by the triple key), and
+#    entity_conv_index / chunk_conv_index exist
+FORMAT_VERSION = 3
+
+# the ONE table → bucket-key map of the warehouse layout: _Warehouse.
+# write buckets these tables by their key (plans/merge.py, Iceberg's
+# bucket transform) so incremental cycles MERGE and prune-read them
+# per key; every other table (wcc, the community tables, lineage, …)
+# is a plain overwrite
+BUCKET_KEYS = {
+    **dict.fromkeys(
+        (
+            "transcripts", "registry", "chunks", "extractions", "parsed",
+            "entities_raw", "triples_raw", "mentions_raw",
+        ),
+        "conv_id",
+    ),
+    **dict.fromkeys(
+        ("entity_embeddings", "canonical_map", "entities", "entity_conv_index"),
+        "entity_id",
+    ),
+    "similar": "src",
+    **dict.fromkeys(
+        ("mentions", "chunk_embeddings", "chunk_conv_index"), "chunk_id"
+    ),
+    "triples": TRIPLE_KEY_COL,
+}
 
 
 def link_fingerprint(cfg) -> dict:
@@ -162,9 +196,17 @@ def community_fingerprint(cfg) -> dict:
 
 
 class _Warehouse:
-    def __init__(self, spark: SparkSession, root: str):
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        num_buckets: int = BuildConfig.bucket_convs,
+    ):
         self.spark = spark
         self.root = root
+        # bucket count of tables this run (re)creates; merges into an
+        # existing table follow the count in its _bucket_spec.json
+        self.num_buckets = num_buckets
         self._lineage_buffer: list = []
         # linking-config fingerprint of the CURRENT plan run; persisted
         # alongside canonical_map so a later cycle can tell whether the
@@ -180,23 +222,15 @@ class _Warehouse:
         return fsio.exists(os.path.join(self.path(name), "_SUCCESS"))
 
     def read(self, name: str) -> DataFrame:
-        from ..operators.canonicalize import TRIPLE_KEY_COL
-        from .merge import BUCKET_COL
-
         df = self.spark.read.parquet(self.path(name))
         for internal in (BUCKET_COL, TRIPLE_KEY_COL):
             if internal in df.columns:
                 df = df.drop(internal)
         return df
 
-    def write(
-        self,
-        df: DataFrame,
-        name: str,
-        mode: str = "overwrite",
-        group_key: str | None = None,
-        num_buckets: int = 0,
-    ) -> DataFrame:
+    def write(self, df: DataFrame, name: str) -> DataFrame:
+        """Overwrite table ``name`` — bucket-partitioned by its
+        BUCKET_KEYS key when it has one, plain parquet otherwise."""
         if name == "entity_embeddings":
             # entering the linking-table overwrite window: the four
             # linking tables (entity_embeddings/similar/wcc/
@@ -210,12 +244,12 @@ class _Warehouse:
             # canonical_map write (the last of the four on every path)
             # makes the probe decline for the whole torn window.
             fsio.remove(os.path.join(self.root, LINK_PARAMS_FILE))
-        if group_key and num_buckets > 0:
-            from .merge import write_bucketed
-
-            write_bucketed(df, self.path(name), group_key, num_buckets)
+        if name in BUCKET_KEYS:
+            write_bucketed(
+                df, self.path(name), BUCKET_KEYS[name], self.num_buckets
+            )
         else:
-            df.write.mode(mode).parquet(self.path(name))
+            df.write.mode("overwrite").parquet(self.path(name))
         if name == "canonical_map" and self.link_params is not None:
             fsio.write_json(
                 os.path.join(self.root, LINK_PARAMS_FILE), self.link_params
@@ -269,7 +303,7 @@ class _Warehouse:
         """Version stamped at the end of the last completed
         build/cycle; warehouses predating the marker (or a corrupt
         marker) read as 1 — the safe direction: the one-time repairs
-        in ensure_mentions_raw_conv_complete re-run idempotently."""
+        in ensure_current_format re-run idempotently."""
         try:
             return int(
                 fsio.read_json(os.path.join(self.root, FORMAT_FILE)).get(
@@ -337,22 +371,37 @@ class _Warehouse:
         return {r["partition_id"] for r in rows}
 
 
-def ensure_mentions_raw_conv_complete(wh: _Warehouse) -> bool:
-    """One-time repair for warehouses written before format v2.
+_RELAYOUT_SUFFIX = "__relayout"
 
-    Pre-v2 ``mentions_raw`` used a corpus-wide dropDuplicates(chunk_id,
-    entity_id): a (chunk, entity) pair contributed by several
-    conversations (content-hash chunk ids collide by design) was
-    stored under ONE arbitrary conv, so the delta path's conv-keyed
-    MERGE lost the pair when that conv was deleted even though another
-    conversation still held the chunk. ``entities_raw`` is stored
-    WITHOUT dedup (every parsed node occurrence), so the conv-complete
-    table is exactly its distinct (conv, chunk, entity) projection —
-    rebuild mentions_raw from it through the table's own bucketed
-    layout, then stamp the format marker. Idempotent; returns True
-    when a rebuild happened."""
-    from .merge import table_bucket_spec, write_bucketed
+_INDEX_TABLES = ("entity_conv_index", "chunk_conv_index")
 
+
+def ensure_current_format(wh: _Warehouse) -> bool:
+    """The one-time repair point for warehouses written by older code;
+    a current warehouse costs one marker read.
+
+    v1 → v2: pre-v2 ``mentions_raw`` used a corpus-wide
+    dropDuplicates(chunk_id, entity_id): a (chunk, entity) pair
+    contributed by several conversations (content-hash chunk ids
+    collide by design) was stored under ONE arbitrary conv, so the
+    delta cycle's conv-keyed MERGE lost the pair when that conv was
+    deleted even though another conversation still held the chunk.
+    ``entities_raw`` is stored WITHOUT dedup (every parsed node
+    occurrence), so the conv-complete table is exactly its distinct
+    (conv, chunk, entity) projection — mentions_raw is rebuilt from it.
+
+    v2 → v3 relayout: every existing BUCKET_KEYS table without a
+    matching ``_bucket_spec.json`` is rewritten bucket-partitioned by
+    its key (triples re-keyed via with_triple_key). Each rewrite lands
+    beside the table (``<name>__relayout``) and is then swapped in, so
+    no crash window holds zero complete copies; a complete relayout
+    copy left by a crash is promoted on the retry. The entity→conv and
+    chunk→conv inverted indexes are built LAST, from the re-laid raw
+    tables, and the v3 marker is stamped at the very end — a crash
+    anywhere re-runs the relayout, which skips tables already carrying
+    their spec (idempotent).
+
+    Returns True when mentions_raw was rebuilt or any table rewritten."""
     if wh.stored_format_version() >= FORMAT_VERSION:
         return False
     if not wh.exists("mentions_raw") or not wh.exists("entities_raw"):
@@ -360,30 +409,54 @@ def ensure_mentions_raw_conv_complete(wh: _Warehouse) -> bool:
         # later cycles don't re-probe
         wh.write_format_version()
         return False
-    rebuilt = (
-        wh.read("entities_raw")
-        .select("chunk_id", "conv_id", "entity_id")
-        .dropDuplicates(["conv_id", "chunk_id", "entity_id"])
-    )
-    spec = table_bucket_spec(wh.path("mentions_raw"))
-    if spec is not None:
-        write_bucketed(
-            rebuilt, wh.path("mentions_raw"), spec["key"], spec["num_buckets"]
+    changed = False
+    if wh.stored_format_version() < 2:
+        wh.write(
+            wh.read("entities_raw")
+            .select("chunk_id", "conv_id", "entity_id")
+            .dropDuplicates(["conv_id", "chunk_id", "entity_id"]),
+            "mentions_raw",
         )
-    else:
-        rebuilt.write.mode("overwrite").parquet(wh.path("mentions_raw"))
+        changed = True
+
+    def laid_out(name: str) -> bool:
+        spec = table_bucket_spec(wh.path(name))
+        return spec is not None and spec["key"] == BUCKET_KEYS[name]
+
+    for name in BUCKET_KEYS:
+        path = wh.path(name)
+        nxt = path + _RELAYOUT_SUFFIX
+        # write_bucketed writes the spec last, so a relayout copy WITH
+        # one is complete and only its swap was interrupted
+        if table_bucket_spec(nxt) is None:
+            if name in _INDEX_TABLES or not wh.exists(name) or laid_out(name):
+                continue
+            df = wh.read(name)
+            if name == "triples":
+                df = with_triple_key(df)
+            write_bucketed(df, nxt, BUCKET_KEYS[name], wh.num_buckets)
+        fsio.rmtree(path)
+        fsio.rename(nxt, path)
+        changed = True
+    if not all(laid_out(name) for name in _INDEX_TABLES):
+        wh.write(
+            entity_conv_pairs(
+                wh.read("entities_raw"),
+                wh.read("triples_raw"),
+                wh.read("mentions_raw"),
+            ),
+            "entity_conv_index",
+        )
+        wh.write(
+            wh.read("chunks").select("chunk_id", "conv_id").distinct(),
+            "chunk_conv_index",
+        )
+        changed = True
     wh.write_format_version()
-    return True
+    return changed
 
 
-def _stage(
-    wh: _Warehouse,
-    name: str,
-    resume: bool,
-    compute,
-    group_key: str | None = None,
-    num_buckets: int = 0,
-) -> DataFrame:
+def _stage(wh: _Warehouse, name: str, resume: bool, compute) -> DataFrame:
     """Materialize-or-reuse one stage; lineage row on compute.
 
     Stage lineage is deferred (one batched write at the end of
@@ -394,7 +467,7 @@ def _stage(
     if resume and wh.exists(name):
         return wh.read(name)
     t0 = time.time()
-    df = wh.write(compute(), name, group_key=group_key, num_buckets=num_buckets)
+    df = wh.write(compute(), name)
     wh.append_lineage(name, -1, df.count(), t0, defer=True)
     return df
 
@@ -453,32 +526,24 @@ def _extraction_stage(
     final = chunks.select("chunk_id", "conv_id").join(
         wh.read("extraction_cache").dropDuplicates(["chunk_id"]), "chunk_id"
     ).select("chunk_id", "conv_id", "result")
-    return wh.write(
-        final,
-        name,
-        group_key="conv_id" if cfg.bucket_convs else None,
-        num_buckets=cfg.bucket_convs,
-    )
+    return wh.write(final, name)
 
 
 def build_all(
     spark: SparkSession, transcripts: DataFrame, cfg: BuildConfig
 ) -> BuildResult:
-    wh = _Warehouse(spark, cfg.warehouse)
+    wh = _Warehouse(spark, cfg.warehouse, cfg.bucket_convs)
     wh.link_params = link_fingerprint(cfg)
     fsio.makedirs(cfg.warehouse)
     res = BuildResult()
     t_start = time.time()
+    if not wh.exists("transcripts"):
+        # nothing older code wrote lives here, so every table is
+        # current from its first write: a resume after a crash skips
+        # the one-time repair below
+        wh.write_format_version()
 
-    bk = cfg.bucket_convs
-    transcripts = _stage(
-        wh,
-        "transcripts",
-        cfg.resume,
-        lambda: transcripts,
-        group_key="conv_id" if bk else None,
-        num_buckets=bk,
-    )
+    transcripts = _stage(wh, "transcripts", cfg.resume, lambda: transcripts)
     res.tables["transcripts"] = transcripts
 
     # registry and chunks both derive from transcripts only — two
@@ -492,16 +557,9 @@ def build_all(
                 "registry",
                 cfg.resume,
                 lambda: conversation_registry(transcripts),
-                group_key="conv_id" if bk else None,
-                num_buckets=bk,
             ),
             lambda: _stage(
-                wh,
-                "chunks",
-                cfg.resume,
-                lambda: chunk_conversations(transcripts),
-                group_key="conv_id" if bk else None,
-                num_buckets=bk,
+                wh, "chunks", cfg.resume, lambda: chunk_conversations(transcripts)
             ),
         ]
     )
@@ -512,69 +570,56 @@ def build_all(
     res.tables["extractions"] = extractions
 
     parsed = _stage(
-        wh,
-        "parsed",
-        cfg.resume,
-        lambda: parse_extractions(extractions),
-        group_key="conv_id" if bk else None,
-        num_buckets=bk,
+        wh, "parsed", cfg.resume, lambda: parse_extractions(extractions)
     )
-    conv_key = {"group_key": "conv_id" if bk else None, "num_buckets": bk}
     e_raw, t_raw, m_raw = _run_parallel(
         [
             lambda: _stage(
-                wh, "entities_raw", cfg.resume,
-                lambda: entities_raw(parsed), **conv_key,
+                wh, "entities_raw", cfg.resume, lambda: entities_raw(parsed)
             ),
             lambda: _stage(
-                wh, "triples_raw", cfg.resume,
-                lambda: triples_raw(parsed), **conv_key,
+                wh, "triples_raw", cfg.resume, lambda: triples_raw(parsed)
             ),
             lambda: _stage(
-                wh, "mentions_raw", cfg.resume,
-                lambda: mentions_raw(parsed), **conv_key,
+                wh, "mentions_raw", cfg.resume, lambda: mentions_raw(parsed)
             ),
         ]
     )
     res.tables.update(entities_raw=e_raw, triples_raw=t_raw, mentions_raw=m_raw)
 
-    # format-v2 guarantee: a resume may have reused a pre-upgrade
-    # mentions_raw (corpus-wide dedup) — repair it before anything
-    # downstream consumes it; a fresh write is v2 by construction
-    if cfg.resume:
-        if ensure_mentions_raw_conv_complete(wh):
-            m_raw = wh.read("mentions_raw")
-            res.tables["mentions_raw"] = m_raw
-    else:
-        wh.write_format_version()
-
-    # inverted pair indexes (bucketed warehouses only): entity→conv and
-    # chunk→conv. These are the Spark analogue of Neo4j's adjacency
-    # index — the incremental delta path looks up "which conversations
-    # contain entity X / chunk Y" with a bucket-pruned read instead of
-    # a corpus scan (plans/incremental.py delta path; reference
-    # re-points only merge-touched edges, entity_merger.py:348-360).
-    if bk:
-        _run_parallel(
-            [
-                lambda: _stage(
-                    wh,
-                    "entity_conv_index",
-                    cfg.resume,
-                    lambda: entity_conv_pairs(e_raw, t_raw, m_raw),
-                    group_key="entity_id",
-                    num_buckets=bk,
-                ),
-                lambda: _stage(
-                    wh,
-                    "chunk_conv_index",
-                    cfg.resume,
-                    lambda: chunks.select("chunk_id", "conv_id").distinct(),
-                    group_key="chunk_id",
-                    num_buckets=bk,
-                ),
-            ]
+    # a resume may have reused tables written by older code — bring
+    # them to the current format before anything downstream consumes
+    # them. The repair may rewrite any table read so far, so those are
+    # re-read.
+    if cfg.resume and ensure_current_format(wh):
+        res.tables.update({n: wh.read(n) for n in res.tables})
+        chunks, e_raw, t_raw, m_raw = (
+            res.tables[n]
+            for n in ("chunks", "entities_raw", "triples_raw", "mentions_raw")
         )
+
+    # inverted pair indexes: entity→conv and chunk→conv. These are the
+    # Spark analogue of Neo4j's adjacency index — the incremental delta
+    # path looks up "which conversations contain entity X / chunk Y"
+    # with a bucket-pruned read instead of a corpus scan
+    # (plans/incremental.py; the reference re-points only merge-touched
+    # edges, entity_merger.py:348-360).
+    _run_parallel(
+        [
+            lambda: _stage(
+                wh,
+                "entity_conv_index",
+                cfg.resume,
+                lambda: entity_conv_pairs(e_raw, t_raw, m_raw),
+            ),
+            lambda: _stage(
+                wh,
+                "chunk_conv_index",
+                cfg.resume,
+                lambda: chunks.select("chunk_id", "conv_id").distinct(),
+            ),
+        ]
+    )
 
     # linking: one driver-side pass when the catalog is small (same
     # core spec as the distributed chain — see linking.py), else the
@@ -588,8 +633,8 @@ def build_all(
             )
         return _linked_cache[0]
 
-    # entity_embeddings / similar / canonical_map are bucketed (when
-    # the warehouse is) so incremental cycles can MERGE their deltas
+    # entity_embeddings / similar / canonical_map are bucketed so
+    # incremental cycles can MERGE their deltas
     # instead of overwriting O(catalog) bytes per cycle; wcc stays an
     # overwrite — its dense component numbering is a global
     # renumbering, so its rows have no stable per-key identity to
@@ -603,8 +648,6 @@ def build_all(
             if _linked() is not None
             else with_embeddings(entity_catalog(e_raw, chunks))
         ),
-        group_key="entity_id" if bk else None,
-        num_buckets=bk,
     )
 
     similar = _stage(
@@ -616,8 +659,6 @@ def build_all(
             if _linked() is not None
             else similar_entities(embedded, method=cfg.similarity_method)
         ),
-        group_key="src" if bk else None,
-        num_buckets=bk,
     )
     res.tables["similar"] = similar
 
@@ -643,12 +684,8 @@ def build_all(
             if _linked() is not None
             else resolve_canonical(wcc)
         ),
-        group_key="entity_id" if bk else None,
-        num_buckets=bk,
     )
     res.tables["canonical_map"] = cmap
-
-    from ..operators.canonicalize import TRIPLE_KEY_COL, with_triple_key
 
     triples, mentions = _run_parallel(
         [
@@ -656,21 +693,13 @@ def build_all(
                 wh,
                 "triples",
                 cfg.resume,
-                lambda: (
-                    with_triple_key(rewrite_triples(t_raw, cmap))
-                    if bk
-                    else rewrite_triples(t_raw, cmap)
-                ),
-                group_key=TRIPLE_KEY_COL if bk else None,
-                num_buckets=bk,
+                lambda: with_triple_key(rewrite_triples(t_raw, cmap)),
             ),
             lambda: _stage(
                 wh,
                 "mentions",
                 cfg.resume,
                 lambda: rewrite_mentions(m_raw, cmap),
-                group_key="chunk_id" if bk else None,
-                num_buckets=bk,
             ),
         ]
     )
@@ -687,8 +716,6 @@ def build_all(
         "entities",
         cfg.resume,
         _entities,
-        group_key="entity_id" if bk else None,
-        num_buckets=bk,
     )
     res.tables["entities"] = entities
 
@@ -742,8 +769,6 @@ def build_all(
                 "chunk_embeddings",
                 cfg.resume,
                 _chunk_embeddings,
-                group_key="chunk_id" if bk else None,
-                num_buckets=bk,
             ),
         ]
     )
@@ -755,6 +780,9 @@ def build_all(
     # the writing run left, which is the truthful one)
     if fresh_detection:
         wh.commit_community_params(community_fingerprint(cfg))
+    # stamped only once every table is written: a rebuild over an older
+    # warehouse that crashes midway leaves its old tables to the repair
+    wh.write_format_version()
 
     wh.flush_lineage()
     res.metrics["build_seconds"] = time.time() - t_start

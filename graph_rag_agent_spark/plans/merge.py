@@ -105,11 +105,13 @@ def write_bucketed(
         .partitionBy(BUCKET_COL)
         .parquet(path)
     )
-    _write_spec(path, key, num_buckets)
     # an EMPTY frame (a canonical map with no merges, a similarity
     # table with no pairs) writes zero partition directories — park
     # the schema-bearing 0-row marker so the table stays readable
     _keep_readable(with_bucket, path, key, num_buckets)
+    # the spec goes last: its presence marks a complete table (the
+    # format-v3 relayout in plans/build.py relies on this)
+    _write_spec(path, key, num_buckets)
 
 
 def read_bucketed(spark: SparkSession, path: str) -> DataFrame:

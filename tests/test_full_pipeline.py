@@ -143,3 +143,8 @@ def test_kill_and_resume_identical(spark, transcripts_df, oracle_small, tmp_path
         by_bucket.setdefault(r["partition_id"], 0)
         by_bucket[r["partition_id"]] += 1
     assert by_bucket == {0: 1, 1: 1, 2: 1, 3: 1}
+
+
+def test_bucket_convs_must_be_positive():
+    with pytest.raises(ValueError, match="bucket_convs"):
+        BuildConfig(warehouse="unused", bucket_convs=0)

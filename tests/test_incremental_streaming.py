@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -439,10 +441,14 @@ def test_delta_incremental_matches_rebuild_and_is_delta_proportional(
     )
     build_all(spark, transcripts_df, cfg)
 
-    from graph_rag_agent_spark.plans.incremental import _delta_capable
-    from graph_rag_agent_spark.plans.build import _Warehouse
+    from graph_rag_agent_spark.operators.canonicalize import TRIPLE_KEY_COL
+    from graph_rag_agent_spark.plans.build import FORMAT_VERSION, _Warehouse
+    from graph_rag_agent_spark.plans.merge import table_bucket_spec
 
-    assert _delta_capable(_Warehouse(spark, wh))
+    assert _Warehouse(spark, wh).stored_format_version() == FORMAT_VERSION
+    assert table_bucket_spec(f"{wh}/triples")["key"] == TRIPLE_KEY_COL
+    for index in ("entity_conv_index", "chunk_conv_index"):
+        assert table_bucket_spec(f"{wh}/{index}") is not None
 
     # v2: drop conv-000003, truncate conv-000001
     v2_rows = [
@@ -993,26 +999,19 @@ def test_delta_incremental_shared_chunk_survives_conv_delete(
         assert twin_chunks and twin_chunks <= mention_chunks
 
 
-def test_pre_v2_warehouse_mentions_raw_repair(spark, tmp_path_factory):
-    """A warehouse written by pre-v2 code (corpus-wide mentions_raw
-    dedup, no format marker) is repaired on the next incremental
-    cycle: mentions_raw is rebuilt conv-complete from the undeduped
-    entities_raw, the format marker is stamped, and deleting the conv
-    the old dedup had pinned a shared pair to no longer loses it."""
-    import os
+def _row_set(df):
+    return {
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.select(*sorted(df.columns)).collect()
+    }
 
-    from pyspark.sql import Window
 
-    from graph_rag_agent_spark.plans.build import (
-        FORMAT_FILE,
-        FORMAT_VERSION,
-        _Warehouse,
-    )
-    from graph_rag_agent_spark.plans.merge import (
-        table_bucket_spec,
-        write_bucketed,
-    )
-
+@pytest.fixture(scope="module")
+def prev2_corpus(spark, tmp_path_factory):
+    """Shared by the format-repair cases: a warehouse of corpus v1
+    (with a clone of conv-000002, so its chunks are shared) that each
+    case copies, the v2 corpus (conv-000002 deleted) and the row sets
+    of a fresh build of v2."""
     base = generate_transcripts(6)
     clone = [
         {**r, "conv_id": "conv-clone"}
@@ -1020,55 +1019,134 @@ def test_pre_v2_warehouse_mentions_raw_repair(spark, tmp_path_factory):
         if r["conv_id"] == "conv-000002"
     ]
     v1 = base + clone
-    wh_path = str(tmp_path_factory.mktemp("wh_prev2"))
+    v1_wh = str(tmp_path_factory.mktemp("wh_prev2_v1"))
+    build_all(
+        spark,
+        spark.createDataFrame(v1, schema=schemas.TRANSCRIPTS),
+        BuildConfig(
+            warehouse=v1_wh,
+            similarity_method="exact",
+            extraction_buckets=2,
+            bucket_convs=8,
+        ),
+    )
+    v2_rows = [r for r in v1 if r["conv_id"] != "conv-000002"]
+    rebuilt = build_all(
+        spark,
+        spark.createDataFrame(v2_rows, schema=schemas.TRANSCRIPTS),
+        BuildConfig(
+            warehouse=str(tmp_path_factory.mktemp("wh_prev2_ref")),
+            similarity_method="exact",
+            extraction_buckets=2,
+            bucket_convs=8,
+        ),
+    )
+    ref = {
+        name: _row_set(rebuilt.tables[name])
+        for name in (
+            "mentions",
+            "mentions_raw",
+            "triples",
+            "entities",
+            "canonical_map",
+            "membership",
+        )
+    }
+    return v1_wh, v2_rows, ref
+
+
+@pytest.mark.parametrize(
+    "layout,version", [("bucketed", 1), ("plain", 1), ("plain", 2)]
+)
+def test_pre_v2_warehouse_mentions_raw_repair(
+    spark, tmp_path_factory, prev2_corpus, layout, version
+):
+    """A warehouse written by older code is brought to the current
+    format by the next incremental cycle.
+
+    Format 1 (pre-v2: corpus-wide mentions_raw dedup, no format
+    marker): mentions_raw is rebuilt conv-complete from the undeduped
+    entities_raw, and deleting the conv the old dedup had pinned a
+    shared pair to no longer loses it. Plain layout (no bucket specs,
+    no inverted indexes, triples without their key column): every
+    table is re-laid out bucketed and the indexes are built. Either
+    way the marker is stamped, the cycle's tables equal a fresh
+    build_all, and a second (no-change) cycle rewrites no table."""
+    import glob
+    import os
+
+    from pyspark.sql import Window
+
+    from graph_rag_agent_spark.plans.build import (
+        BUCKET_KEYS,
+        FORMAT_FILE,
+        FORMAT_VERSION,
+        _Warehouse,
+    )
+    from graph_rag_agent_spark.plans.fsio import write_json
+
+    v1_wh, v2_rows, ref = prev2_corpus
+    wh_path = str(tmp_path_factory.mktemp("wh_prev2") / "wh")
+    shutil.copytree(v1_wh, wh_path)
     cfg = BuildConfig(
         warehouse=wh_path,
         similarity_method="exact",
         extraction_buckets=2,
         bucket_convs=8,
     )
-    build_all(spark, spark.createDataFrame(v1, schema=schemas.TRANSCRIPTS), cfg)
 
-    # simulate the pre-v2 layout: pin each (chunk, entity) pair to its
-    # minimum conv (what dropDuplicates could have kept) and drop the
-    # format marker
-    wh = _Warehouse(spark, wh_path)
-    mr_path = wh.path("mentions_raw")
-    spec = table_bucket_spec(mr_path)
-    w = Window.partitionBy("chunk_id", "entity_id").orderBy("conv_id")
-    old_style = (
-        wh.read("mentions_raw")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-        .localCheckpoint()  # materialize before overwriting its source
-    )
-    write_bucketed(old_style, mr_path, spec["key"], spec["num_buckets"])
-    os.remove(os.path.join(wh_path, FORMAT_FILE))
+    wh = _Warehouse(spark, wh_path, cfg.bucket_convs)
+    if layout == "plain":
+        # what older code wrote without bucket_convs: plain parquet
+        # tables (materialized before overwriting their own source)
+        # and no inverted indexes
+        for name in BUCKET_KEYS:
+            if name.endswith("_index"):
+                shutil.rmtree(wh.path(name))
+            else:
+                wh.read(name).localCheckpoint().write.mode(
+                    "overwrite"
+                ).parquet(wh.path(name))
+        assert not glob.glob(f"{wh_path}/*/_bucket_spec.json")
+    if version == 1:
+        # simulate the pre-v2 mentions_raw: pin each (chunk, entity)
+        # pair to its minimum conv (what dropDuplicates could have
+        # kept) and drop the format marker
+        w = Window.partitionBy("chunk_id", "entity_id").orderBy("conv_id")
+        old_style = (
+            wh.read("mentions_raw")
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .drop("rn")
+            .localCheckpoint()  # materialize before overwriting its source
+        )
+        if layout == "plain":
+            old_style.write.mode("overwrite").parquet(wh.path("mentions_raw"))
+        else:
+            wh.write(old_style, "mentions_raw")
+        os.remove(os.path.join(wh_path, FORMAT_FILE))
+    else:
+        write_json(os.path.join(wh_path, FORMAT_FILE), {"version": version})
     assert wh.stored_format_version() < FORMAT_VERSION
 
     # delete the conv the old dedup pinned shared pairs to (min conv)
-    v2_rows = [r for r in v1 if r["conv_id"] != "conv-000002"]
     v2_df = spark.createDataFrame(v2_rows, schema=schemas.TRANSCRIPTS)
     tables = incremental_update(spark, v2_df, wh_path, cfg=cfg)
     assert wh.stored_format_version() >= FORMAT_VERSION
-
-    wh2 = str(tmp_path_factory.mktemp("wh_prev2_ref"))
-    rebuilt = build_all(
-        spark,
-        v2_df,
-        BuildConfig(
-            warehouse=wh2,
-            similarity_method="exact",
-            extraction_buckets=2,
-            bucket_convs=8,
-        ),
+    specs = sorted(glob.glob(f"{wh_path}/*/_bucket_spec.json"))
+    assert [os.path.basename(os.path.dirname(p)) for p in specs] == sorted(
+        BUCKET_KEYS
     )
-    for name in ["mentions", "mentions_raw", "triples"]:
-        cols = sorted(tables[name].columns)
-        a = {tuple(r) for r in tables[name].select(*cols).collect()}
-        b = {tuple(r) for r in rebuilt.tables[name].select(*cols).collect()}
-        assert a == b, f"{name} diverged after pre-v2 repair"
+    for name, want in ref.items():
+        assert _row_set(tables[name]) == want, (
+            f"{name} diverged after the format repair"
+        )
+
+    # the repair is one-time: a second cycle on the same snapshot
+    # rewrites no bucketed table
+    mtimes = {p: os.stat(p).st_mtime_ns for p in specs}
+    incremental_update(spark, v2_df, wh_path, cfg=cfg)
+    assert {p: os.stat(p).st_mtime_ns for p in specs} == mtimes
 
 
 def test_delta_extraction_cache_hits_across_conversations(
