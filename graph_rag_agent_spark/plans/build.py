@@ -376,7 +376,28 @@ _RELAYOUT_SUFFIX = "__relayout"
 _INDEX_TABLES = ("entity_conv_index", "chunk_conv_index")
 
 
-def ensure_current_format(wh: _Warehouse) -> bool:
+def _swap_in(wh: _Warehouse, name: str) -> None:
+    """Replace table ``name`` by its complete relayout copy."""
+    path = wh.path(name)
+    fsio.rmtree(path)
+    fsio.rename(path + _RELAYOUT_SUFFIX, path)
+
+
+def _finish_relayout_swaps(wh: _Warehouse) -> None:
+    """Finish what a crash inside the relayout interrupted.
+    write_bucketed writes the spec last and a swap starts only after
+    it, so a ``<name>__relayout`` copy WITH a spec is complete (its
+    table may already be deleted) and is promoted, and a copy without
+    one is torn (its table is intact) and is dropped."""
+    for name in BUCKET_KEYS:
+        nxt = wh.path(name) + _RELAYOUT_SUFFIX
+        if table_bucket_spec(nxt) is not None:
+            _swap_in(wh, name)
+        else:
+            fsio.rmtree(nxt)
+
+
+def ensure_current_format(wh: _Warehouse) -> None:
     """The one-time repair point for warehouses written by older code;
     a current warehouse costs one marker read.
 
@@ -392,53 +413,47 @@ def ensure_current_format(wh: _Warehouse) -> bool:
 
     v2 → v3 relayout: every existing BUCKET_KEYS table without a
     matching ``_bucket_spec.json`` is rewritten bucket-partitioned by
-    its key (triples re-keyed via with_triple_key). Each rewrite lands
-    beside the table (``<name>__relayout``) and is then swapped in, so
-    no crash window holds zero complete copies; a complete relayout
-    copy left by a crash is promoted on the retry. The entity→conv and
-    chunk→conv inverted indexes are built LAST, from the re-laid raw
-    tables, and the v3 marker is stamped at the very end — a crash
-    anywhere re-runs the relayout, which skips tables already carrying
-    their spec (idempotent).
-
-    Returns True when mentions_raw was rebuilt or any table rewritten."""
-    if wh.stored_format_version() >= FORMAT_VERSION:
-        return False
-    if not wh.exists("mentions_raw") or not wh.exists("entities_raw"):
-        # nothing to repair (fresh or partial warehouse) — stamp so
-        # later cycles don't re-probe
-        wh.write_format_version()
-        return False
-    changed = False
-    if wh.stored_format_version() < 2:
-        wh.write(
-            wh.read("entities_raw")
-            .select("chunk_id", "conv_id", "entity_id")
-            .dropDuplicates(["conv_id", "chunk_id", "entity_id"]),
-            "mentions_raw",
-        )
-        changed = True
+    its key (triples re-keyed via with_triple_key). Every rewrite,
+    the v1 mentions_raw rebuild included, lands beside its table
+    (``<name>__relayout``) and is then swapped in, so each table
+    always has one complete copy; the swaps a crash interrupted are
+    finished first (_finish_relayout_swaps), before any table is
+    probed. The entity→conv and chunk→conv inverted indexes are built
+    LAST, from the re-laid raw tables, and the v3 marker is stamped at
+    the very end — a crash anywhere re-runs the repair, which skips
+    tables already carrying their spec (idempotent)."""
+    version = wh.stored_format_version()
+    if version >= FORMAT_VERSION:
+        return
+    _finish_relayout_swaps(wh)
 
     def laid_out(name: str) -> bool:
         spec = table_bucket_spec(wh.path(name))
         return spec is not None and spec["key"] == BUCKET_KEYS[name]
 
     for name in BUCKET_KEYS:
-        path = wh.path(name)
-        nxt = path + _RELAYOUT_SUFFIX
-        # write_bucketed writes the spec last, so a relayout copy WITH
-        # one is complete and only its swap was interrupted
-        if table_bucket_spec(nxt) is None:
-            if name in _INDEX_TABLES or not wh.exists(name) or laid_out(name):
-                continue
+        if name in _INDEX_TABLES or not wh.exists(name):
+            continue
+        if name == "mentions_raw" and version < 2 and wh.exists("entities_raw"):
+            df = (
+                wh.read("entities_raw")
+                .select("chunk_id", "conv_id", "entity_id")
+                .dropDuplicates(["conv_id", "chunk_id", "entity_id"])
+            )
+        elif laid_out(name):
+            continue
+        else:
             df = wh.read(name)
             if name == "triples":
                 df = with_triple_key(df)
-            write_bucketed(df, nxt, BUCKET_KEYS[name], wh.num_buckets)
-        fsio.rmtree(path)
-        fsio.rename(nxt, path)
-        changed = True
-    if not all(laid_out(name) for name in _INDEX_TABLES):
+        write_bucketed(
+            df, wh.path(name) + _RELAYOUT_SUFFIX, BUCKET_KEYS[name], wh.num_buckets
+        )
+        _swap_in(wh, name)
+    raw = ("chunks", "entities_raw", "triples_raw", "mentions_raw")
+    if all(wh.exists(n) for n in raw) and not all(
+        laid_out(n) for n in _INDEX_TABLES
+    ):
         wh.write(
             entity_conv_pairs(
                 wh.read("entities_raw"),
@@ -451,9 +466,7 @@ def ensure_current_format(wh: _Warehouse) -> bool:
             wh.read("chunks").select("chunk_id", "conv_id").distinct(),
             "chunk_conv_index",
         )
-        changed = True
     wh.write_format_version()
-    return changed
 
 
 def _stage(wh: _Warehouse, name: str, resume: bool, compute) -> DataFrame:
@@ -537,11 +550,14 @@ def build_all(
     fsio.makedirs(cfg.warehouse)
     res = BuildResult()
     t_start = time.time()
-    if not wh.exists("transcripts"):
-        # nothing older code wrote lives here, so every table is
-        # current from its first write: a resume after a crash skips
-        # the one-time repair below
-        wh.write_format_version()
+    if cfg.resume:
+        # a resume reuses stored tables: bring those older code wrote
+        # to the current format before any stage reads them
+        ensure_current_format(wh)
+    else:
+        # a rebuild rewrites every table; just leave no relayout copy
+        # behind
+        _finish_relayout_swaps(wh)
 
     transcripts = _stage(wh, "transcripts", cfg.resume, lambda: transcripts)
     res.tables["transcripts"] = transcripts
@@ -586,17 +602,6 @@ def build_all(
         ]
     )
     res.tables.update(entities_raw=e_raw, triples_raw=t_raw, mentions_raw=m_raw)
-
-    # a resume may have reused tables written by older code — bring
-    # them to the current format before anything downstream consumes
-    # them. The repair may rewrite any table read so far, so those are
-    # re-read.
-    if cfg.resume and ensure_current_format(wh):
-        res.tables.update({n: wh.read(n) for n in res.tables})
-        chunks, e_raw, t_raw, m_raw = (
-            res.tables[n]
-            for n in ("chunks", "entities_raw", "triples_raw", "mentions_raw")
-        )
 
     # inverted pair indexes: entity→conv and chunk→conv. These are the
     # Spark analogue of Neo4j's adjacency index — the incremental delta

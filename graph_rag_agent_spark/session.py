@@ -20,17 +20,33 @@ import zipfile
 from pyspark.sql import SparkSession
 
 
+# memory limit of the process's cgroup: v2, then v1 ("max" or a huge
+# number when unlimited)
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
 def default_driver_memory() -> str:
-    """32 GB, capped at 40% of physical RAM (floor 1 GB).
+    """32 GB, capped at 40% of the memory the process may use (floor
+    1 GB): physical RAM, or the cgroup memory limit when that is lower.
 
     ParallelGC only collects in earnest once the heap nears its
     maximum, so a 32g heap on a 15 GB box keeps growing until the OOM
     killer takes the driver JVM, and every later Spark call in the
-    process fails. The cap leaves the rest of RAM to the Python
-    workers and the page cache; a 15 GB box gets ~6 GB, which runs the
-    test suite without a GC storm.
+    process fails. The cap leaves the rest to the Python workers and
+    the page cache; a 15 GB box gets ~6 GB, which runs the test suite
+    without a GC storm. Boxes under 80 GB get less than 32 GB.
     """
-    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as fh:
+                total = min(total, int(fh.read()))
+        except (OSError, ValueError):
+            pass
+    total_mb = total // (1024 * 1024)
     return f"{max(1024, min(32 * 1024, total_mb * 2 // 5))}m"
 
 

@@ -1008,10 +1008,10 @@ def _row_set(df):
 
 @pytest.fixture(scope="module")
 def prev2_corpus(spark, tmp_path_factory):
-    """Shared by the format-repair cases: a warehouse of corpus v1
-    (with a clone of conv-000002, so its chunks are shared) that each
-    case copies, the v2 corpus (conv-000002 deleted) and the row sets
-    of a fresh build of v2."""
+    """Shared by the format-repair cases: corpus v1 (with a clone of
+    conv-000002, so its chunks are shared), a warehouse of it that
+    each case copies, the v2 corpus (conv-000002 deleted) and the row
+    sets of a fresh build of v2."""
     base = generate_transcripts(6)
     clone = [
         {**r, "conv_id": "conv-clone"}
@@ -1052,14 +1052,22 @@ def prev2_corpus(spark, tmp_path_factory):
             "membership",
         )
     }
-    return v1_wh, v2_rows, ref
+    return v1, v1_wh, v2_rows, ref
 
 
 @pytest.mark.parametrize(
-    "layout,version", [("bucketed", 1), ("plain", 1), ("plain", 2)]
+    "layout,version,crash_then",
+    [
+        pytest.param("bucketed", 1, None, id="bucketed-1"),
+        pytest.param("plain", 1, None, id="plain-1"),
+        pytest.param("plain", 2, None, id="plain-2"),
+        pytest.param("plain", 1, "incremental_update", id="plain-1-crash"),
+        pytest.param("plain", 2, "build_all", id="plain-2-crash-build_all"),
+    ],
 )
 def test_pre_v2_warehouse_mentions_raw_repair(
-    spark, tmp_path_factory, prev2_corpus, layout, version
+    spark, tmp_path_factory, prev2_corpus, monkeypatch, layout, version,
+    crash_then,
 ):
     """A warehouse written by older code is brought to the current
     format by the next incremental cycle.
@@ -1071,7 +1079,12 @@ def test_pre_v2_warehouse_mentions_raw_repair(
     no inverted indexes, triples without their key column): every
     table is re-laid out bucketed and the indexes are built. Either
     way the marker is stamped, the cycle's tables equal a fresh
-    build_all, and a second (no-change) cycle rewrites no table."""
+    build_all, and a second (no-change) cycle rewrites no table.
+
+    Crash cases: the first repair dies between deleting entities_raw
+    and renaming its re-laid copy into place, and the retry
+    (``crash_then``: another incremental cycle, or a resumed build_all
+    of the old snapshot) must finish the relayout from that copy."""
     import glob
     import os
 
@@ -1085,7 +1098,7 @@ def test_pre_v2_warehouse_mentions_raw_repair(
     )
     from graph_rag_agent_spark.plans.fsio import write_json
 
-    v1_wh, v2_rows, ref = prev2_corpus
+    v1_rows, v1_wh, v2_rows, ref = prev2_corpus
     wh_path = str(tmp_path_factory.mktemp("wh_prev2") / "wh")
     shutil.copytree(v1_wh, wh_path)
     cfg = BuildConfig(
@@ -1131,8 +1144,33 @@ def test_pre_v2_warehouse_mentions_raw_repair(
 
     # delete the conv the old dedup pinned shared pairs to (min conv)
     v2_df = spark.createDataFrame(v2_rows, schema=schemas.TRANSCRIPTS)
+    if crash_then is not None:
+        from graph_rag_agent_spark.plans import fsio
+
+        rename = fsio.rename
+
+        def crash_on_entities_raw(src, dst):
+            if os.path.basename(dst) == "entities_raw":
+                monkeypatch.setattr(fsio, "rename", rename)
+                raise OSError("simulated crash before the swap")
+            rename(src, dst)
+
+        monkeypatch.setattr(fsio, "rename", crash_on_entities_raw)
+        with pytest.raises(OSError, match="simulated crash"):
+            incremental_update(spark, v2_df, wh_path, cfg=cfg)
+        assert not wh.exists("entities_raw")
+        assert os.path.isdir(wh.path("entities_raw") + "__relayout")
+        assert wh.stored_format_version() < FORMAT_VERSION
+        if crash_then == "build_all":
+            build_all(
+                spark,
+                spark.createDataFrame(v1_rows, schema=schemas.TRANSCRIPTS),
+                cfg,
+            )
+            assert wh.stored_format_version() >= FORMAT_VERSION
     tables = incremental_update(spark, v2_df, wh_path, cfg=cfg)
     assert wh.stored_format_version() >= FORMAT_VERSION
+    assert not glob.glob(f"{wh_path}/*__relayout")
     specs = sorted(glob.glob(f"{wh_path}/*/_bucket_spec.json"))
     assert [os.path.basename(os.path.dirname(p)) for p in specs] == sorted(
         BUCKET_KEYS
